@@ -19,24 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "q01_pricing_summary",
-    "q03_run_lengths",
-    "q04_event_rank",
-    "q05_changed_flag",
-    "q06_keyed_diff",
-    "q08_for_bitwidth",
-    "q10_dedup_exact",
-    "q11_minhash_shingle",
-    "q12_token_stats",
-    "q13_lang_id",
-    "q15_ann_cosine_topk",
-    "q18_lsh_candidate_pairs",
-    "q19_simhash_buckets",
-]
+from bench import CPUS, HEADLINE, SF_DIR  # noqa: E402 — one HEADLINE list
 
 
 def main() -> None:

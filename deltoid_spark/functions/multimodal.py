@@ -1081,11 +1081,16 @@ def media_near_dup_pairs(
         raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
     k = max_hamming + 1
     offs = [(64 * i) // k for i in range(k + 1)]
+
+    def ones(width: int):
+        # (1 << 64) - 1 overflows LongType: all 64 bits set is -1
+        return F.lit(-1).cast("long") if width == 64 else F.lit((1 << width) - 1)
+
     bands = [
         F.struct(
             F.lit(b).alias("band"),
             F.shiftrightunsigned(F.col("dhash"), offs[b])
-            .bitwiseAND(F.lit((1 << (offs[b + 1] - offs[b])) - 1)).alias("v"),
+            .bitwiseAND(ones(offs[b + 1] - offs[b])).alias("v"),
         )
         for b in range(k)
     ]

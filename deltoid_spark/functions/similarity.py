@@ -332,23 +332,6 @@ def cosine_near_dup_pairs(
     )
 
 
-def ivf_assignments(emb: DataFrame, n_lists: int = 8) -> DataFrame:
-    """The IVF index build: (vec_id, list_id) via the same zero-shuffle
-    argmax ivf_topk uses — persist this once and join queries onto it
-    instead of recomputing the quantizer per query at scale."""
-    cents = [
-        (int(r["cid"]), list(r["cv"]))
-        for r in emb.orderBy("vec_id")
-        .limit(n_lists)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("cv"),
-        )
-        .collect()
-    ]
-    return emb.select("vec_id", list_id_col(cents).alias("list_id"))
-
-
 _ASSIGN_EXPR_MAX_LISTS = 64
 
 

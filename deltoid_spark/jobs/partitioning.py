@@ -39,8 +39,8 @@ def assign_partitions(
     """Add a deterministic ``part_id`` column; return (df, n_partitions).
 
     key_cols[0] is the coarse grouping key (repo); a giant group is
-    salted by key_cols[1] (path) so chains keyed by the full key tuple
-    never split.
+    salted by key_cols[1] (path), or by key_cols[0] itself when it is
+    the only key, so chains keyed by the full key tuple never split.
     """
     salt_map, base, n_small = build_partition_map(df, target_rows, key_cols)
     out = apply_partition_map(df, salt_map, base, n_small, key_cols)
@@ -63,9 +63,14 @@ def build_partition_map(
     # one aggregate over the group key: tiny output, cached so the giants
     # filter and the global total reuse it instead of rescanning the input
     counts = df.groupBy(group_col).agg(F.count("*").alias("n")).cache()
+    # a giant's group is kept as Spark's text of the key, whatever the
+    # key's type: the persisted map stores it in a string column and
+    # apply_partition_map casts it back, so the value is exact both ways
     giants = [
-        (r[group_col], int(r["n"]))
-        for r in counts.filter(F.col("n") > target_rows).collect()
+        (r["grp"], int(r["n"]))
+        for r in counts.filter(F.col("n") > target_rows)
+        .select(F.col(group_col).cast("string").alias("grp"), "n")
+        .collect()
     ]
     giants.sort()  # deterministic base-id assignment
     base = 0
@@ -94,11 +99,14 @@ def apply_partition_map(
     Groups not in the map — e.g. repos first seen by an append batch —
     hash into the shared small-bucket range, so the map stays valid as
     the table grows (compaction can rebalance later)."""
-    group_col, salt_col = key_cols[0], key_cols[1]
+    group_col = key_cols[0]
+    # a single key column salts by itself: a giant key's rows all hash to
+    # one of its buckets, so its chain stays whole
+    salt_col = key_cols[1] if len(key_cols) > 1 else group_col
     small_rows = df.sparkSession.createDataFrame(
         [(r, b, s) for r, b, s in salt_map],
         f"{group_col} string, base_id long, n_salts long",
-    )
+    ).withColumn(group_col, F.col(group_col).cast(df.schema[group_col].dataType))
     return (
         df.join(F.broadcast(small_rows), group_col, "left")
         .withColumn(

@@ -40,6 +40,7 @@ into the kernels.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -179,23 +180,23 @@ _PA_NULLABLE_INTS = {
 
 
 def _table_to_pdf(
-    tbl: pa.Table, spec: list[tuple[str, str]], arrow_cols: tuple[str, ...] = ()
-) -> tuple[pd.DataFrame, dict[str, pa.Array]]:
-    """(pandas frame, still-Arrow columns).  Columns named in
-    ``arrow_cols`` never become pandas at all — the content column's
-    python-string materialization was the single largest encode cost
-    (measured ~32 s for the 2 GB fixture at 1 core in round 2)."""
+    tbl: pa.Table, spec: list[tuple[str, str]], content_col: str | None
+) -> tuple[pd.DataFrame, pa.Array | None]:
+    """(pandas frame, content column as a large_utf8 Arrow array or
+    None).  A plain-string content column never becomes pandas at all —
+    its python-string materialization was the single largest encode
+    cost (measured ~32 s for the 2 GB fixture at 1 core in round 2)."""
     ddls = dict(spec)
     cols: dict[str, pd.Series] = {}
-    arrows: dict[str, pa.Array] = {}
+    content = None
     for name in tbl.schema.names:
         col = tbl.column(name)
         ddl = ddls.get(name, "")
-        if name in arrow_cols:
-            one = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+        if name == content_col and ddl == "string":
+            one = col.combine_chunks()
             # Spark ships strings as utf8 (int32 offsets); the buffer
             # views/kernels expect large_utf8 — cast once (data shared)
-            arrows[name] = one if one.type == pa.large_utf8() else one.cast(pa.large_utf8())
+            content = one if one.type == pa.large_utf8() else one.cast(pa.large_utf8())
         elif ddl.startswith(("struct<", "array<", "map<")):
             if ddl != "array<string>":
                 # nested trees stay Arrow end-to-end: the NESTED codec
@@ -203,7 +204,7 @@ def _table_to_pdf(
                 # so no python list/dict is ever materialized on encode —
                 # and bigints past 2^53 / NaN-vs-null survive by
                 # construction (round-6)
-                one = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+                one = col.combine_chunks()
                 cols[name] = pd.Series(
                     pd.arrays.ArrowExtensionArray(one), dtype=pd.ArrowDtype(one.type)
                 )
@@ -218,16 +219,7 @@ def _table_to_pdf(
             cols[name] = s
         else:
             cols[name] = col.to_pandas(types_mapper=_PA_NULLABLE_INTS.get)
-    return pd.DataFrame(cols), arrows
-
-
-def _arrow_content_col(
-    spec: list[tuple[str, str]], content_col: str | None
-) -> tuple[str, ...]:
-    """content stays Arrow iff it is a plain string column."""
-    if content_col is not None and dict(spec).get(content_col) == "string":
-        return (content_col,)
-    return ()
+    return pd.DataFrame(cols), content
 
 
 def _float_sortable(a: np.ndarray) -> np.ndarray:
@@ -354,26 +346,21 @@ def _encode_typed(
     )
 
 
-def _map_raw_bytes(s: pd.Series) -> int:
-    return mapdelta_kernel.map_raw_bytes(s)
-
-
 def _group_starts(gsizes: np.ndarray) -> np.ndarray:
     return np.concatenate(([0], np.cumsum(gsizes)[:-1])).astype(np.int64)
 
 
 def _encode_content(
-    s,
+    arr: pa.Array,
     gsizes: np.ndarray,
     keyframe_interval: int,
     level,
-    base_texts: list | None = None,
-    base_versions: np.ndarray | None = None,
-    view: tuple | None = None,
+    base_texts: list | None,
+    base_versions: np.ndarray | None,
+    view: tuple,
 ) -> tuple[str, bytes]:
-    """CHAIN-encode the content column (pandas Series or Arrow array);
-    fall back to whole-column PLAIN only when a cheap zstd bound says
-    PLAIN could plausibly win.
+    """CHAIN-encode the content column; fall back to whole-column PLAIN
+    only when a cheap zstd bound says PLAIN could plausibly win.
 
     The full PLAIN trial used to run unconditionally — an honest but
     ~2x CPU cost on the dominant column.  The gate compresses a
@@ -381,27 +368,22 @@ def _encode_content(
     cross-version redundancy) and extrapolates; the full trial runs
     only when the bound lands within 30% of CHAIN's actual size.
     """
-    is_arrow = isinstance(s, pa.Array)
     buf = chain_kernel.encode_chain(
-        s, gsizes, keyframe_interval=keyframe_interval, level=level,
+        arr, gsizes, keyframe_interval=keyframe_interval, level=level,
         base_texts=base_texts, base_versions=base_versions,
     )
     if base_texts is not None and any(t is not None for t in base_texts):
         # a seeded fragment must stay CHAIN: whole-column PLAIN can't
         # continue chains and seeded deltas are near-minimal anyway
         return "chain", buf
-    if view is None:
-        view = strings.arrow_utf8_view(s) if is_arrow else strings.utf8_view(s)
-    lengths, data = view
+    data = view[1]
     sample = data[: max(4096, len(data) // 8)]
     if sample:
         est_plain = len(blocks_mod.compress(sample, level)) / len(sample) * len(data)
     else:
         est_plain = 0.0
     if est_plain < len(buf) * 1.3:
-        plain_buf = (
-            strings.encode_plain_arrow(s) if is_arrow else api.encode_block(s, "plain")
-        )
+        plain_buf = strings.encode_plain_arrow(arr)
         if len(plain_buf) < len(buf):
             return "plain", plain_buf
     return "chain", buf
@@ -418,18 +400,17 @@ def _encode_rows(
     level,
     run_id: str,
     t0: float,
-    tails: dict | None = None,
-    tail_counts: dict | None = None,
-    content_arr: pa.Array | None = None,
+    tails: dict | None,
+    tail_counts: dict | None,
+    content_arr: pa.Array | None,
 ) -> list[tuple]:
-    """Encode one sorted slice of rows into per-column block rows.
+    """Encode one sorted part into per-column block rows.
 
     tails / tail_counts (from decoded prior fragments) seed chain groups
     that continue an existing (key...) chain — the incremental
-    ``push_snapshot`` path (delta.rs:108-125).  content_arr, when given,
-    is the (already sort-permuted) Arrow form of the content column —
-    it never existed as pandas, so the dominant column skips both
-    python-string materialization boundaries."""
+    ``push_snapshot`` path (delta.rs:108-125).  content_arr is the
+    part's content column, sorted like pdf and still Arrow, so the
+    dominant column never becomes python strings."""
     out = []
     keys = _key_series(pdf, key_cols)
     gsizes = _group_sizes(keys)
@@ -444,6 +425,9 @@ def _encode_rows(
             dtype=np.int64,
         )
     for col, ddl in spec:
+        zmin = zmax = None
+        smin = smax = None
+        blm = sha = None
         if col == content_col and content_arr is not None:
             view = strings.arrow_utf8_view(content_arr)
             raw = int(view[0].sum())
@@ -456,189 +440,37 @@ def _encode_rows(
                 codec, _stats, buf = selector.select_and_encode(
                     content_arr.to_pandas().astype(object)
                 )
-            out.append(
-                (part_id, frag_id, col, codec, buf, len(content_arr), raw,
-                 len(buf), api.sha256_column_arrow(content_arr, view),
-                 time.time() - t0, run_id, None, None, None, None, None)
-            )
-            continue
-        s = pdf[col]
-        zmin = zmax = None
-        smin = smax = None
-        blm = None
-        if ddl == "string":
-            # one Arrow conversion shared by raw-size, the PLAIN-gate
-            # sample, the content digest, and the string zone map
-            arr = pa.Array.from_pandas(s, type=pa.large_utf8())
-            view = strings.arrow_utf8_view(arr)
-            raw = int(view[0].sum())
-            if col == content_col and (len(gsizes) < len(s) or tails):
-                codec, buf = _encode_content(
-                    s, gsizes, keyframe_interval, level, base_texts,
-                    base_versions, view,
-                )
-            else:
-                codec, _stats, buf = selector.select_and_encode(s)
-            sha = api.sha256_column(s, view) if col == content_col else None
-            if col != content_col:
-                # dimension-style string columns (repo/path/lang) get
-                # (smin, smax) zone bounds — the dominant predicate
-                # class over a code corpus ("this repo only"); chained
-                # content bodies don't (not a range-predicate target)
-                smin, smax = _string_zone(arr)
-                # high-cardinality dims (commit/path) additionally get
-                # a Bloom filter: zones answer ranges, blooms answer
-                # the point probes hash-like columns can't zone-prune
-                blm = bloom_kernel.bloom_build(arr)
+            sha = api.sha256_column_arrow(content_arr, view)
+        elif ddl == "string":
+            # one Arrow conversion shared by raw-size, the zone map and
+            # the Bloom filter
+            arr = pa.Array.from_pandas(pdf[col], type=pa.large_utf8())
+            raw = int(strings.arrow_utf8_view(arr)[0].sum())
+            codec, _stats, buf = selector.select_and_encode(pdf[col])
+            # dimension-style string columns (repo/path/lang) get
+            # (smin, smax) zone bounds — the dominant predicate class
+            # over a code corpus ("this repo only"); chained content
+            # bodies don't (not a range-predicate target)
+            smin, smax = _string_zone(arr)
+            # high-cardinality dims (commit/path) additionally get a
+            # Bloom filter: zones answer ranges, blooms answer the point
+            # probes hash-like columns can't zone-prune
+            blm = bloom_kernel.bloom_build(arr)
         elif ddl == "map<string,string>":
             # keyed Add/Edit/Remove chains over the same group layout the
             # content column uses (reference HashMap::delta)
             codec = "mapdelta"
             buf = mapdelta_kernel.encode_mapdelta(
-                s, gsizes, keyframe_interval=keyframe_interval, level=level
+                pdf[col], gsizes, keyframe_interval=keyframe_interval, level=level
             )
-            raw = _map_raw_bytes(s)
-            sha = None
+            raw = mapdelta_kernel.map_raw_bytes(pdf[col])
         else:
-            codec, buf, raw, zmin, zmax = _encode_typed(s, ddl)
-            sha = None
+            codec, buf, raw, zmin, zmax = _encode_typed(pdf[col], ddl)
         out.append(
-            (part_id, frag_id, col, codec, buf, len(s), raw, len(buf), sha,
+            (part_id, frag_id, col, codec, buf, len(pdf), raw, len(buf), sha,
              time.time() - t0, run_id, zmin, zmax, smin, smax, blm)
         )
     return out
-
-
-_BLOCK_COLS = [
-    "part_id", "frag_id", "column", "codec", "payload",
-    "n_rows", "raw_bytes", "enc_bytes", "sha256", "wall_s", "run_id",
-    "zmin", "zmax", "smin", "smax", "bloom",
-]
-
-
-def _block_frame(rows: list[tuple]) -> pd.DataFrame:
-    """Block rows -> DataFrame with the zone-map columns as EXACT
-    nullable Int64 (tuple-list inference would make a None+int column
-    float64 and silently truncate |v| >= 2^53 — the same lossy boundary
-    ADVICE r02 closed on the data path)."""
-    df = pd.DataFrame(rows, columns=_BLOCK_COLS)
-    zi = _BLOCK_COLS.index("zmin")
-    df["zmin"] = pd.array([r[zi] for r in rows], dtype="Int64")
-    df["zmax"] = pd.array([r[zi + 1] for r in rows], dtype="Int64")
-    return df
-
-
-def _error_row(part_id: int, frag_id: int, n_rows: int, exc: Exception, run_id: str, t0: float) -> tuple:
-    """A failed partition becomes one manifest-visible error record —
-    "fail the partition, not the job" (reference taxonomy error.rs)."""
-    msg = f"{type(exc).__name__}: {exc}".encode("utf-8", "replace")[:4096]
-    return (part_id, frag_id, "*", "error", msg, n_rows, 0, 0, None,
-            time.time() - t0, run_id, None, None, None, None, None)
-
-
-def make_encode_kernel(
-    keyframe_interval: int = 32,
-    level: int | None = None,
-    spec: list[tuple[str, str]] | None = None,
-    key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
-    order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
-    content_col: str | None = DEFAULT_CONTENT_COL,
-    run_id: str = "local",
-    fail_inject: str | None = None,
-):
-    spec = spec or DEFAULT_SPEC
-    sort_cols = [*key_cols, *order_cols]
-
-    def encode_partition(tbl: pa.Table) -> pa.Table:
-        t0 = time.time()
-        pdf, arrows = _table_to_pdf(tbl, spec, _arrow_content_col(spec, content_col))
-        part_id = int(pdf["part_id"].iloc[0])
-        try:
-            if fail_inject is not None and (pdf[key_cols[0]] == fail_inject).any():
-                raise RuntimeError(f"injected failure for {fail_inject!r}")
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            content_arr = None
-            if arrows:
-                perm = pa.array(pdf.index.to_numpy(dtype=np.int64))
-                content_arr = arrows[content_col].take(perm)
-            pdf = pdf.reset_index(drop=True)
-            rows = _encode_rows(
-                pdf, part_id, 0, spec, key_cols, content_col,
-                keyframe_interval, level, run_id, t0,
-                content_arr=content_arr,
-            )
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            rows = [_error_row(part_id, 0, len(pdf), exc, run_id, t0)]
-        return pa.Table.from_pandas(
-            _block_frame(rows),
-            schema=_block_arrow_schema(), preserve_index=False,
-        )
-
-    return encode_partition
-
-
-def make_fragment_kernel(
-    keyframe_interval: int = 32,
-    level: int | None = None,
-    spec: list[tuple[str, str]] | None = None,
-    key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
-    order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
-    content_col: str | None = DEFAULT_CONTENT_COL,
-    run_id: str = "local",
-    fail_inject: str | None = None,
-):
-    """mapInArrow kernel for *clustered* mode: encode each input split
-    in place (no shuffle).  The split's rows are sorted and grouped by
-    part_id locally; each (part_id, split) slice becomes a block
-    *fragment*.  Chains crossing split boundaries simply start a new
-    keyframe — a bounded ratio cost, zero data movement.
-    """
-    spec = spec or DEFAULT_SPEC
-    sort_cols = [*key_cols, *order_cols]
-
-    def encode_split(batches):
-        from pyspark import TaskContext
-
-        frag_id = TaskContext.get().partitionId() if TaskContext.get() else 0
-        tables = list(batches)
-        if not tables:
-            return
-        t0 = time.time()
-        pdf, arrows = _table_to_pdf(
-            pa.Table.from_batches(tables), spec, _arrow_content_col(spec, content_col)
-        )
-        pdf = pdf.sort_values(["part_id", *sort_cols], kind="mergesort")
-        content_sorted = None
-        if arrows:
-            content_sorted = arrows[content_col].take(
-                pa.array(pdf.index.to_numpy(dtype=np.int64))
-            )
-        pdf = pdf.reset_index(drop=True)
-        rows: list[tuple] = []
-        for part_id, sub in pdf.groupby("part_id", sort=True):
-            pos = sub.index.to_numpy(dtype=np.int64)
-            sub = sub.reset_index(drop=True)
-            try:
-                if fail_inject is not None and (sub[key_cols[0]] == fail_inject).any():
-                    raise RuntimeError(f"injected failure for {fail_inject!r}")
-                carr = (
-                    content_sorted.take(pa.array(pos))
-                    if content_sorted is not None
-                    else None
-                )
-                rows.extend(
-                    _encode_rows(
-                        sub, int(part_id), frag_id, spec, key_cols,
-                        content_col, keyframe_interval, level, run_id, t0,
-                        content_arr=carr,
-                    )
-                )
-            except Exception as exc:  # noqa: BLE001
-                rows.append(_error_row(int(part_id), frag_id, len(sub), exc, run_id, t0))
-        out = _block_frame(rows)
-        yield pa.RecordBatch.from_pandas(out, schema=_block_arrow_schema())
-
-    return encode_split
 
 
 def _block_arrow_schema() -> pa.Schema:
@@ -655,6 +487,143 @@ def _block_arrow_schema() -> pa.Schema:
             ("bloom", pa.binary()),
         ]
     )
+
+
+def _block_table(rows: list[tuple]) -> pa.Table:
+    """Block rows -> Arrow table, column by column with exact types (a
+    pandas frame would infer a None+int zone column as float64 and
+    silently truncate |v| >= 2^53 — the lossy boundary ADVICE r02
+    closed on the data path)."""
+    schema = _block_arrow_schema()
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def _error_row(part_id: int, frag_id: int, n_rows: int, exc: Exception, run_id: str, t0: float) -> tuple:
+    """A failed partition becomes one manifest-visible error record —
+    "fail the partition, not the job" (reference taxonomy error.rs)."""
+    msg = f"{type(exc).__name__}: {exc}".encode("utf-8", "replace")[:4096]
+    return (part_id, frag_id, "*", "error", msg, n_rows, 0, 0, None,
+            time.time() - t0, run_id, None, None, None, None, None)
+
+
+def _encode_table(
+    tbl: pa.Table,
+    frag_id: int,
+    *,
+    spec: list[tuple[str, str]],
+    key_cols: tuple[str, ...],
+    order_cols: tuple[str, ...],
+    content_col: str | None,
+    keyframe_interval: int,
+    level: int | None,
+    run_id: str,
+    fail_inject: str | None,
+    prior: pd.DataFrame | None = None,
+) -> list[tuple]:
+    """The encode core behind the grouped, clustered and append kernels:
+    every part_id in ``tbl`` becomes one fragment ``frag_id`` of block
+    rows.
+
+    One stable sort on (part_id, key..., order...) makes each part a
+    contiguous slice (the content column is sliced, not copied) with
+    each key's chain contiguous and in version order inside it.
+    ``prior`` holds the block rows the table's part already has
+    (append): their decoded chain tails seed the new fragment.  A part
+    whose encode raises becomes one error row."""
+    t0 = time.time()
+    pdf, content = _table_to_pdf(tbl, spec, content_col)
+    pdf = pdf.sort_values(["part_id", *key_cols, *order_cols], kind="mergesort")
+    if content is not None:
+        content = content.take(pa.array(pdf.index.to_numpy(dtype=np.int64)))
+    pdf = pdf.reset_index(drop=True)
+    ids = pdf["part_id"].to_numpy(dtype=np.int64)
+    cuts = np.flatnonzero(ids[1:] != ids[:-1]) + 1
+    rows: list[tuple] = []
+    for lo, hi in zip([0, *cuts], [*cuts, len(ids)]) if len(ids) else ():
+        part_id = int(ids[lo])
+        sub = pdf if hi - lo == len(pdf) else pdf.iloc[lo:hi].reset_index(drop=True)
+        try:
+            if fail_inject is not None and (sub[key_cols[0]] == fail_inject).any():
+                raise RuntimeError(f"injected failure for {fail_inject!r}")
+            tails = tail_counts = None
+            if prior is not None:
+                _rows, tails, tail_counts = _decode_fragments(
+                    prior, spec, key_cols, content_col
+                )
+            rows.extend(
+                _encode_rows(
+                    sub, part_id, frag_id, spec, key_cols, content_col,
+                    keyframe_interval, level, run_id, t0, tails, tail_counts,
+                    None if content is None else content.slice(lo, hi - lo),
+                )
+            )
+        except Exception as exc:  # noqa: BLE001 — isolation is the point
+            rows.append(_error_row(part_id, frag_id, hi - lo, exc, run_id, t0))
+    return rows
+
+
+def make_encode_kernel(
+    keyframe_interval: int = 32,
+    level: int | None = None,
+    spec: list[tuple[str, str]] | None = None,
+    key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
+    order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
+    content_col: str | None = DEFAULT_CONTENT_COL,
+    run_id: str = "local",
+    fail_inject: str | None = None,
+):
+    """applyInArrow kernel for *grouped* mode and compact: one part_id
+    per call, encoded as fragment 0."""
+    encode = functools.partial(
+        _encode_table, spec=spec or DEFAULT_SPEC, key_cols=key_cols,
+        order_cols=order_cols, content_col=content_col,
+        keyframe_interval=keyframe_interval, level=level, run_id=run_id,
+        fail_inject=fail_inject,
+    )
+
+    def encode_partition(tbl: pa.Table) -> pa.Table:
+        return _block_table(encode(tbl, 0))
+
+    return encode_partition
+
+
+def make_fragment_kernel(
+    keyframe_interval: int = 32,
+    level: int | None = None,
+    spec: list[tuple[str, str]] | None = None,
+    key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
+    order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
+    content_col: str | None = DEFAULT_CONTENT_COL,
+    run_id: str = "local",
+    fail_inject: str | None = None,
+):
+    """mapInArrow kernel for *clustered* mode: encode each input split
+    in place (no shuffle).  Each (part_id, split) slice becomes a block
+    *fragment* numbered by the split.  Chains crossing split boundaries
+    simply start a new keyframe — a bounded ratio cost, zero data
+    movement.
+    """
+    encode = functools.partial(
+        _encode_table, spec=spec or DEFAULT_SPEC, key_cols=key_cols,
+        order_cols=order_cols, content_col=content_col,
+        keyframe_interval=keyframe_interval, level=level, run_id=run_id,
+        fail_inject=fail_inject,
+    )
+
+    def encode_split(batches):
+        from pyspark import TaskContext
+
+        tables = list(batches)
+        if not tables:
+            return
+        ctx = TaskContext.get()
+        frag_id = ctx.partitionId() if ctx else 0
+        yield from _block_table(encode(pa.Table.from_batches(tables), frag_id)).to_batches()
+
+    return encode_split
 
 
 # ----------------------------------------------------- schema/manifest IO ----
@@ -1041,41 +1010,16 @@ def make_append_kernel(
     as a continuation fragment whose chain groups delta against those
     tails (reference ``push_snapshot``, delta.rs:108-125).
     """
-    sort_cols = [*key_cols, *order_cols]
+    encode = functools.partial(
+        _encode_table, spec=spec, key_cols=key_cols, order_cols=order_cols,
+        content_col=content_col, keyframe_interval=keyframe_interval,
+        level=level, run_id=run_id, fail_inject=fail_inject,
+    )
 
     def append_partition(left_t: pa.Table, right_t: pa.Table) -> pa.Table:
-        t0 = time.time()
-        if left_t.num_rows == 0:
-            return _block_arrow_schema().empty_table()
-        left, arrows = _table_to_pdf(left_t, spec, _arrow_content_col(spec, content_col))
-        right = right_t.to_pandas()  # block rows: binary payloads, exact
-        part_id = int(left["part_id"].iloc[0])
-        frag_id = int(right["frag_id"].max()) + 1 if len(right) else 0
-        try:
-            if fail_inject is not None and (left[key_cols[0]] == fail_inject).any():
-                raise RuntimeError(f"injected failure for {fail_inject!r}")
-            _rows, tails, tail_counts = _decode_fragments(
-                right, spec, key_cols, content_col
-            )
-            pdf = left.sort_values(sort_cols, kind="mergesort")
-            content_arr = None
-            if arrows:
-                content_arr = arrows[content_col].take(
-                    pa.array(pdf.index.to_numpy(dtype=np.int64))
-                )
-            pdf = pdf.reset_index(drop=True)
-            rows = _encode_rows(
-                pdf, part_id, frag_id, spec, key_cols, content_col,
-                keyframe_interval, level, run_id, t0,
-                tails=tails, tail_counts=tail_counts,
-                content_arr=content_arr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            rows = [_error_row(part_id, frag_id, len(left), exc, run_id, t0)]
-        return pa.Table.from_pandas(
-            _block_frame(rows),
-            schema=_block_arrow_schema(), preserve_index=False,
-        )
+        prior = right_t.to_pandas()  # block rows: binary payloads, exact
+        frag_id = int(prior["frag_id"].max()) + 1 if len(prior) else 0
+        return _block_table(encode(left_t, frag_id, prior=prior))
 
     return append_partition
 

@@ -41,31 +41,6 @@ from .strings import decode_plain, encode_plain_arrow
 DEFAULT_KEYFRAME_INTERVAL = 32
 
 
-def _line_delta(prev: list[str], new: list[str]) -> tuple[np.ndarray, list[str], list[str], int]:
-    """Positional edit script prev -> new (deltoid Vec semantics).
-
-    Thin wrapper over _version_deltas kept for tests/direct callers."""
-    e_idx, elines, adds, remove, _p, _d, _i = _version_deltas(
-        np.array(prev, dtype=object), np.array(new, dtype=object)
-    )
-    return e_idx, list(elines), list(adds), remove
-
-
-def _splice_delta(prev: list[str], new: list[str]) -> tuple[int, int, list[str]]:
-    """Single-splice script: common prefix/suffix trim, middle replaced.
-
-    Engine upgrade over the reference's purely positional diff
-    (vec.rs:8-11 admits it's stack-like): a middle insert shifts every
-    later line, which positional diff encodes as edits-to-end-of-file;
-    the splice encodes just (start, n_deleted, inserted_lines).
-    Returns (start, del_count, ins_lines).
-    """
-    _e, _el, _a, _r, p, sdel, sins = _version_deltas(
-        np.array(prev, dtype=object), np.array(new, dtype=object)
-    )
-    return p, sdel, list(sins)
-
-
 def _version_deltas(a: np.ndarray, b: np.ndarray):
     """BOTH delta scripts (positional + splice) from one elementwise
     comparison of two line arrays — the hot path converts each version

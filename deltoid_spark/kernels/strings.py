@@ -72,8 +72,11 @@ def arrow_utf8_view(arr: pa.Array) -> tuple[np.ndarray, bytes]:
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
     lengths = np.diff(offs)
-    data = bufs[2].to_pybytes()[offs[0] : offs[-1]] if bufs[2] is not None else b""
-    return lengths, data
+    # slice the buffer before copying: a sliced array (one part of a
+    # split) must not copy its whole parent's data
+    if bufs[2] is None:
+        return lengths, b""
+    return lengths, bufs[2].slice(offs[0], offs[-1] - offs[0]).to_pybytes()
 
 
 def utf8_view(series: pd.Series) -> tuple[np.ndarray, bytes]:

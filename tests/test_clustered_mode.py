@@ -52,3 +52,37 @@ def test_clustered_no_shuffle_in_plan(spark, tiny):
     ) or "ShuffleExchange" not in plan
     # the only exchange allowed is the broadcast of the giant-repo salt map
     assert "ShuffleExchange" not in plan
+
+def test_fragment_kernel_matches_grouped_kernel_per_part():
+    """One split holding whole parts: the clustered kernel's block for
+    each (part_id, column) is byte-identical to the grouped kernel's
+    block for that part alone — both run the same encode core."""
+    import zlib
+
+    import pyarrow as pa
+
+    from deltoid_spark.jobs.pipeline import make_encode_kernel, make_fragment_kernel
+
+    pdf = codegen.generate(3_000, seed=5)
+    # parts keyed by (repo, path), so every chain is whole inside one part
+    pdf["part_id"] = [
+        zlib.crc32(f"{r}\0{p}".encode()) % 4 for r, p in zip(pdf["repo"], pdf["path"])
+    ]
+    pdf = pdf.sample(frac=1.0, random_state=0).reset_index(drop=True)
+    split = pa.Table.from_pandas(pdf, preserve_index=False)
+    frag = pa.Table.from_batches(
+        list(make_fragment_kernel()(iter(split.to_batches(max_chunksize=700))))
+    ).to_pylist()
+    assert {r["frag_id"] for r in frag} == {0}
+    got = {(r["part_id"], r["column"]): r for r in frag}
+
+    grouped = make_encode_kernel()
+    want = {}
+    for p in range(4):
+        part = pa.Table.from_pandas(pdf[pdf["part_id"] == p], preserve_index=False)
+        for r in grouped(part).to_pylist():
+            want[(r["part_id"], r["column"])] = r
+    assert got.keys() == want.keys() and len(want) == 4 * 5
+    for k, r in want.items():
+        for f in ("codec", "payload", "n_rows", "raw_bytes", "sha256", "smin", "smax", "bloom"):
+            assert got[k][f] == r[f], (k, f)

@@ -525,6 +525,20 @@ def test_media_near_dup_bands_track_max_hamming(spark):
     assert multimodal.media_near_dup_pairs(hashed).count() == 0
 
 
+def test_media_near_dup_max_hamming_zero(spark):
+    """max_hamming=0 is one 64-bit band (its all-ones mask must fit a
+    long): exactly the equal-dhash pairs come back, negative hashes
+    included."""
+    rows = [(0, -5), (1, -5), (2, -4), (3, 0x0123456789ABCDEF),
+            (4, 0x0123456789ABCDEF), (5, 0x0123456789ABCDEF), (6, 7)]
+    hashed = spark.createDataFrame(rows, "media_id long, dhash long")
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in multimodal.media_near_dup_pairs(hashed, max_hamming=0).collect()
+    }
+    assert got == {(0, 1): 0, (3, 4): 0, (3, 5): 0, (4, 5): 0}
+
+
 def test_media_near_dup_mega_bucket_guard(spark):
     """A planted mega-bucket — 1000 identical flat images (the
     all-equal dhash every boilerplate corpus produces) — must NOT go

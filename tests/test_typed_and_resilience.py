@@ -72,6 +72,34 @@ def test_typed_columns_roundtrip(spark, tmp_path_factory):
                                         "active", "created", "ts"))
 
 
+def test_single_bigint_key_with_giant_group(spark, tmp_path_factory):
+    """One key column, a bigint past 2^53, and one key group above
+    target_rows: the group salts by the key itself (so its chain stays
+    in one partition) and its value survives the persisted partition
+    map exactly — an append batch for it lands in the same partition."""
+    from deltoid_spark.jobs import encode_append
+
+    giant = (1 << 60) + 7
+    ddl = "id bigint, content string, ver int"
+    rows = [(giant, f"v{v}\nshared body\n", v) for v in range(150)]
+    rows += [(k, f"small {k}.{v}\n", v) for k in range(40) for v in range(3)]
+    df = spark.createDataFrame(rows, ddl)
+    out = str(tmp_path_factory.mktemp("bigint_key"))
+    manifest = encode(spark, df, out, target_rows=50, key_cols=("id",))
+    assert metrics_summary(manifest)["failed_partitions"] == 0
+    report = verify(spark, df, decode(spark, out), key_cols=("id", "ver"))
+    assert report["ok"], report
+
+    batch = spark.createDataFrame([(giant, "v150\nshared body\n", 150)], ddl)
+    encode_append(spark, batch, out)
+    decoded = decode(spark, out, with_part_id=True)
+    parts = decoded.filter(F.col("id") == giant).select("part_id").distinct().collect()
+    assert len(parts) == 1
+    report = verify(spark, df.unionByName(batch), decoded.drop("part_id"),
+                    key_cols=("id", "ver"))
+    assert report["ok"], report
+
+
 def test_unsupported_type_rejected(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("unsup"))
     import decimal
